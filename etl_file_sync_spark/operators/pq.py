@@ -37,8 +37,16 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_file_sync_spark.localrel import local_rows_df
-from etl_file_sync_spark.operators.similarity import vec_ok
+from etl_file_sync_spark.operators.similarity import (
+    _centroid_matrix,
+    cosine_expr,
+    kmeans_centroids,
+    make_centroids,
+    probe_cells,
+    query_matrix,
+    rank_topk,
+    vec_ok,
+)
 from pyspark.sql import Window as W
 
 
@@ -47,9 +55,6 @@ def _normalized_matrix_stream(df: DataFrame, id_col: str, vec_col: str) -> DataF
     return df.where(vec_ok(F.col(vec_col))).select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     )
-
-
-_TOPK_SCHEMA = "query_id long, neighbor_id long, cosine double, nn_rank int"
 
 
 def _make_pq_codes():
@@ -125,98 +130,69 @@ def pq_train(
     """
     spark = df.sparkSession
     v = _normalized_matrix_stream(df, id_col, vec_col)
-    # The count (sampling decision) and the seed collect are BOTH full
-    # actions that open training, each paying the ~200 ms scheduling
-    # floor serially. When the optimizer's size estimate says the input
-    # is small (metadata only — parquet footer stats, no job), run them
-    # CONCURRENTLY on the unsampled frame (guide §2.6): if the count
-    # then proves sampling unnecessary — the overwhelmingly common case
-    # under the estimate gate — the speculative seed IS the seed the
-    # sequential code computed. If sampling does fire, the speculative
-    # seed is discarded and re-collected from the sampled frame, so the
-    # training set and seed are identical to the sequential spelling at
-    # every size. Above the gate (any real-scale corpus) the sequential
-    # path runs unchanged — no speculative full-corpus scan, no
-    # full-corpus cache.
-    try:
-        est_bytes = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        est_bytes = 1 << 62
-    speculate = max_train is not None and est_bytes < (64 << 20)
-    if speculate:
-        v = v.cache()
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_n = pool.submit(inheritable_thread_target(v.count))
-            f_seed = pool.submit(
-                inheritable_thread_target(lambda: v.orderBy("id").limit(k).collect())
-            )
-            n = f_n.result()
-            seed_rows = f_seed.result()
-    else:
-        n = v.count()
-        seed_rows = None
+    n = v.count()
     # max_train=None reproduces the unbounded pre-r3 training (see
     # DEVIATIONS.md behavior-change history)
     if max_train is not None and n > max_train:
         rate = -(-n // max_train)  # ceil division
-        if speculate:
-            v.unpersist()
         v = v.filter(F.pmod(F.xxhash64(F.col("id")), F.lit(rate)) == 0)
-        seed_rows = None
     # the training sample is BOUNDED (<= ~max_train rows by the hash
-    # sample above OR the estimate gate), so caching it is scale-safe —
-    # and the seed collect plus every Lloyd round below re-reads it;
-    # uncached, each pass re-scans and re-filters the full corpus
-    if seed_rows is None:
-        v = v.cache()
+    # sample above), so caching it is scale-safe — and the seed collect
+    # plus every Lloyd round below re-reads it; uncached, each pass
+    # re-scans and re-filters the full corpus. The codebooks are numpy,
+    # so nothing downstream needs the cache once this returns or raises.
+    v = v.cache()
+    try:
         seed_rows = v.orderBy("id").limit(k).collect()  # k rows — tiny by design
-    S0 = np.array([list(r.v) for r in seed_rows], dtype=np.float64)
-    S0 = S0 / np.linalg.norm(S0, axis=1, keepdims=True)
-    d = S0.shape[1]
-    if d % m:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    sub = d // m
-    C = np.stack([S0[:, j * sub : (j + 1) * sub] for j in range(m)])  # (m, k, sub)
+        S0 = np.array([list(r.v) for r in seed_rows], dtype=np.float64)
+        S0 = S0 / np.linalg.norm(S0, axis=1, keepdims=True)
+        d = S0.shape[1]
+        if d % m:
+            raise ValueError(f"dim {d} not divisible by m={m}")
+        sub = d // m
+        C = np.stack([S0[:, j * sub : (j + 1) * sub] for j in range(m)])  # (m, k, sub)
 
-    for _ in range(max(0, iters)):
-        bC = spark.sparkContext.broadcast(C)
+        for _ in range(max(0, iters)):
+            bC = spark.sparkContext.broadcast(C)
 
-        def partials(batches):
-            Cm = bC.value
-            mm, kk, ss = Cm.shape
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                V = np.array(pdf["v"].tolist(), dtype=np.float64)
-                V = V / np.linalg.norm(V, axis=1, keepdims=True)
-                out_m, out_c, out_n, out_s = [], [], [], []
-                for j in range(mm):
-                    X = V[:, j * ss : (j + 1) * ss]
-                    d2 = ((X[:, None, :] - Cm[j][None, :, :]) ** 2).sum(-1)
-                    assign = np.argmin(d2, axis=1)  # ties -> lowest codeword
-                    sums = np.zeros((kk, ss))
-                    np.add.at(sums, assign, X)
-                    counts = np.bincount(assign, minlength=kk)
-                    nz = np.where(counts > 0)[0]
-                    out_m += [j] * len(nz)
-                    out_c += nz.tolist()
-                    out_n += counts[nz].tolist()
-                    out_s += list(sums[nz])
-                yield pd.DataFrame({"m": out_m, "c": out_c, "n": out_n, "s": out_s})
+            def partials(batches):
+                Cm = bC.value
+                mm, kk, ss = Cm.shape
+                for pdf in batches:
+                    if len(pdf) == 0:
+                        continue
+                    V = np.array(pdf["v"].tolist(), dtype=np.float64)
+                    V = V / np.linalg.norm(V, axis=1, keepdims=True)
+                    out_m, out_c, out_n, out_s = [], [], [], []
+                    for j in range(mm):
+                        X = V[:, j * ss : (j + 1) * ss]
+                        d2 = ((X[:, None, :] - Cm[j][None, :, :]) ** 2).sum(-1)
+                        assign = np.argmin(d2, axis=1)  # ties -> lowest codeword
+                        sums = np.zeros((kk, ss))
+                        np.add.at(sums, assign, X)
+                        counts = np.bincount(assign, minlength=kk)
+                        nz = np.where(counts > 0)[0]
+                        out_m += [j] * len(nz)
+                        out_c += nz.tolist()
+                        out_n += counts[nz].tolist()
+                        out_s += list(sums[nz])
+                    yield pd.DataFrame({"m": out_m, "c": out_c, "n": out_n, "s": out_s})
 
-        part = v.mapInPandas(partials, "m int, c int, n long, s array<double>").toPandas()
-        part = part.sort_values(["m", "c"], kind="mergesort")
-        newC = C.copy()
-        for (j, c), grp in part.groupby(["m", "c"], sort=True):
-            tot = grp["n"].sum()
-            s = np.sum(np.array(grp["s"].tolist(), dtype=np.float64), axis=0)
-            newC[j, c] = s / tot
-        bC.destroy()
-        if np.allclose(newC, C, atol=1e-12):
+            part = v.mapInPandas(partials, "m int, c int, n long, s array<double>").toPandas()
+            part = part.sort_values(["m", "c"], kind="mergesort")
+            newC = C.copy()
+            for (j, c), grp in part.groupby(["m", "c"], sort=True):
+                tot = grp["n"].sum()
+                s = np.sum(np.array(grp["s"].tolist(), dtype=np.float64), axis=0)
+                newC[j, c] = s / tot
+            bC.destroy()
+            if np.allclose(newC, C, atol=1e-12):
+                C = newC
+                break
             C = newC
-            break
-        C = newC
-    return C
+        return C
+    finally:
+        v.unpersist()
 
 
 def pq_encode(
@@ -245,6 +221,65 @@ def pq_encode(
     return v.mapInPandas(enc, "id bigint, v array<double>, codes array<int>")
 
 
+def _open_search(corpus, queries, m, kcent, iters, id_col, vec_col, max_queries, op, cents=None):
+    """The independent bounded driver actions that open a PQ search —
+    the degenerate probe, pq_train, the query side and (IVF-PQ) the
+    centroid matrix — overlapped on a small thread pool instead of
+    paying the ~200 ms/action scheduling floor serially (guide §2.6).
+    Results are bit-identical to running them in sequence.
+    inheritable_thread_target(spark) carries the caller's job group,
+    local properties and session tags into the pool threads, so pooled
+    jobs still answer spark.interruptTag.
+
+    Returns None when either side has no usable vector (the caller
+    answers with an empty frame; a pooled action crashing on that input
+    — e.g. an empty codebook seed — is absorbed), else the results
+    keyed "train", "q" and, when `cents` is given, "cmat"."""
+    spark = corpus.sparkSession
+    actions = {
+        "degen": lambda: _degenerate_ann_input(corpus, queries, vec_col),
+        "train": lambda: pq_train(corpus, m, kcent, iters, id_col, vec_col),
+        "q": lambda: query_matrix(queries, id_col, vec_col, max_queries, op),
+    }
+    if cents is not None:
+        # cents is consumed exactly once (this collect), so it is
+        # deliberately NOT cached (round-8 ADVICE)
+        actions["cmat"] = lambda: _centroid_matrix(cents)
+    with ThreadPoolExecutor(max_workers=len(actions)) as pool:
+        futs = {
+            name: pool.submit(inheritable_thread_target(spark)(fn))
+            for name, fn in actions.items()
+        }
+        if futs.pop("degen").result():
+            for f in futs.values():
+                f.exception()  # wait, and drop what degenerate input raised
+            return None
+        return {name: f.result() for name, f in futs.items()}
+
+
+def _rerank(scored, corpus, queries, k, shortlist, id_col, vec_col):
+    """ADC-scored (query_id, neighbor_id, pq_score) pairs -> each query's
+    top-`shortlist` (self-pairs excluded) -> exact cosine on the raw
+    vectors of that shortlist only -> the shared rank tail. Recall
+    comes from here; PQ only has to get the true neighbors into the
+    shortlist."""
+    w = W.partitionBy("query_id").orderBy(F.col("pq_score").desc(), F.col("neighbor_id"))
+    cand = (
+        scored.filter(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn("r", F.row_number().over(w))
+        .filter(F.col("r") <= shortlist)
+        .select("query_id", "neighbor_id")
+    )
+    qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv"))
+    nv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("nv"))
+    rer = (
+        cand.join(F.broadcast(qv), "query_id")
+        .join(nv, "neighbor_id")
+        .withColumn("cosine", cosine_expr(F.col("qv"), F.col("nv")))
+    )
+    return rank_topk(corpus.sparkSession, rer, k)
+
+
 def pq_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -265,54 +300,12 @@ def pq_topk(
     Query side is small BY CONTRACT (broadcast LUTs), enforced like
     cosine_topk; batch-scale query sets would partition the LUT frame.
     """
-    from etl_file_sync_spark.operators.similarity import QuerySideTooLarge, cosine_expr
-
     spark = corpus.sparkSession
-    # The build runs several INDEPENDENT bounded driver actions (the
-    # degenerate probe, the pq_train count/seed/Lloyd chain, the query
-    # collect). Serially each pays the ~200 ms/action scheduling floor;
-    # submitted from a small thread pool they overlap (guide §2.6) —
-    # inheritable_thread_target propagates the caller's job group /
-    # description thread-locals into the pool threads. Results are
-    # bit-identical: the same actions run, only their wall overlap
-    # changes.
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_degen = pool.submit(
-            inheritable_thread_target(
-                lambda: _degenerate_ann_input(corpus, queries, vec_col)
-            )
-        )
-        f_train = pool.submit(
-            inheritable_thread_target(
-                lambda: pq_train(corpus, m, kcent, iters, id_col, vec_col)
-            )
-        )
-        f_q = pool.submit(
-            inheritable_thread_target(
-                lambda: (
-                    queries.select(
-                        F.col(id_col).alias("qid"),
-                        F.col(vec_col).cast("array<double>").alias("qv"),
-                    )
-                    .limit(max_queries + 1)
-                    .collect()
-                )
-            )
-        )
-        if f_degen.result():
-            # degenerate input may legitimately crash the concurrent
-            # train/collect (e.g. an empty codebook seed) — absorb them;
-            # the sequential spelling never ran them at all
-            f_train.exception()
-            f_q.exception()
-            return spark.createDataFrame([], _TOPK_SCHEMA)
-        C = f_train.result()
-        qrows = f_q.result()
-    if len(qrows) > max_queries:
-        raise QuerySideTooLarge(f"pq_topk query side exceeds max_queries={max_queries}")
-    qids = np.array([r.qid for r in qrows], dtype=np.int64)
-    Q = np.array([list(r.qv) for r in qrows], dtype=np.float64)
-    Q = Q / np.linalg.norm(Q, axis=1, keepdims=True)
+    opened = _open_search(corpus, queries, m, kcent, iters, id_col, vec_col, max_queries, "pq_topk")
+    if opened is None:
+        return rank_topk(spark, None, k)
+    C = opened["train"]
+    qids, Q = opened["q"]
     mm, kk, ss = C.shape
     # ADC lookup tables: (n_queries, m, k) inner products
     lut = np.einsum("qms,mks->qmk", Q.reshape(len(Q), mm, ss), C)
@@ -353,27 +346,7 @@ def pq_topk(
 
     v = _normalized_matrix_stream(corpus, id_col, vec_col)
     scored = v.mapInPandas(enc_adc, "query_id long, neighbor_id long, pq_score double")
-    w = W.partitionBy("query_id").orderBy(F.col("pq_score").desc(), F.col("neighbor_id"))
-    cand = (
-        scored.filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    # exact rerank on the shortlist only
-    qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv"))
-    nv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("nv"))
-    rer = (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(nv, "neighbor_id")
-        .withColumn("cosine", cosine_expr(F.col("qv"), F.col("nv")))
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        rer.withColumn("nn_rank", F.row_number().over(w2))
-        .filter(F.col("nn_rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cosine", 4).alias("cosine"), "nn_rank")
-    )
+    return _rerank(scored, corpus, queries, k, shortlist, id_col, vec_col)
 
 
 def ivfpq_topk(
@@ -404,67 +377,24 @@ def ivfpq_topk(
     Returns (query_id, neighbor_id, cosine, nn_rank) — the same
     contract as cosine_topk / ivf_topk / pq_topk.
     """
-    from etl_file_sync_spark.operators.similarity import (
-        QuerySideTooLarge,
-        _centroid_matrix,
-        cosine_expr,
-        kmeans_centroids,
-        make_centroids,
-    )
-
     spark = corpus.sparkSession
     if kmeans_iters > 0:
         cents = kmeans_centroids(corpus, every, kmeans_iters, id_col, vec_col)
     else:
         cents = make_centroids(corpus, every, id_col, vec_col)
-    # Four INDEPENDENT bounded driver actions open this build — the
-    # degenerate probe, the centroid-matrix collect, the pq_train
-    # count/seed/Lloyd chain, and the query collect — overlapped from a
-    # small thread pool (guide §2.6) instead of paying the ~200 ms/action
-    # scheduling floor serially (see pq_topk). Bit-identical results:
-    # the same actions run, only their wall overlap changes.
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        f_degen = pool.submit(
-            inheritable_thread_target(
-                lambda: _degenerate_ann_input(corpus, queries, vec_col)
-            )
-        )
-        # collect the centroid matrix ONCE — the assign pass and the
-        # probe selection below share it. cents is consumed exactly once
-        # (this collect) since the cmat fusion, so it is deliberately
-        # NOT cached (round-8 ADVICE).
-        f_cmat = pool.submit(inheritable_thread_target(lambda: _centroid_matrix(cents)))
-        f_train = pool.submit(
-            inheritable_thread_target(
-                lambda: pq_train(corpus, m, kcent, iters, id_col, vec_col)
-            )
-        )
-        # the query side is contract-small, like pq_topk
-        f_q = pool.submit(
-            inheritable_thread_target(
-                lambda: (
-                    queries.select(
-                        F.col(id_col).alias("qid"),
-                        F.col(vec_col).cast("array<double>").alias("qv"),
-                    )
-                    .limit(max_queries + 1)
-                    .collect()
-                )
-            )
-        )
-        if f_degen.result():
-            # degenerate input may legitimately crash the concurrent
-            # builds (empty codebook seed) — absorb; the sequential
-            # spelling never ran them at all
-            f_cmat.exception()
-            f_train.exception()
-            f_q.exception()
-            return spark.createDataFrame([], _TOPK_SCHEMA)
-        cmat = f_cmat.result()
-        C = f_train.result()
-        qrows = f_q.result()
-    if len(qrows) > max_queries:
-        raise QuerySideTooLarge(f"ivfpq_topk query side exceeds max_queries={max_queries}")
+    # the centroid matrix is collected ONCE — the assign pass and the
+    # probe selection below share it
+    opened = _open_search(
+        corpus, queries, m, kcent, iters, id_col, vec_col, max_queries, "ivfpq_topk", cents
+    )
+    if opened is None:
+        return rank_topk(spark, None, k)
+    C = opened["train"]
+    qids, Q = opened["q"]
+    cmat = opened["cmat"]
+    cids, Cn = cmat
+    if not len(cids):  # no centroids (no id divisible by `every`): nothing to probe
+        return rank_topk(spark, None, k)
     # ONE fused Arrow pass over the corpus: IVF assign + PQ encode,
     # emitting only (id, centroid_id, codes). The old shape ran
     # ivf_assign (cached), a SECOND mapInPandas over its output for the
@@ -476,54 +406,34 @@ def ivfpq_topk(
     # assignments and codes are bit-identical; the rerank still reads
     # raw vectors from `corpus`, never from this pass. (At 100 TB the
     # corpus is WRITTEN partitioned by centroid_id instead — docstring.)
-    cids, Cn = cmat
-    if len(cids) == 0:
-        # no centroids (no id divisible by `every`): nothing assignable,
-        # same empty candidate set the ivf_assign path produced
-        coded = spark.createDataFrame([], "id bigint, centroid_id bigint, codes array<int>")
-    else:
-        b_ae = spark.sparkContext.broadcast((cids, Cn, C))
+    b_ae = spark.sparkContext.broadcast((cids, Cn, C))
 
-        def assign_encode(batches):
-            ids_, Cm, CB = b_ae.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                V = np.array(pdf["v"].tolist(), dtype=np.float64)
-                Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-                best = np.argmax(Vn @ Cm.T, axis=1)  # ties -> lowest centroid_id
-                codes = _pq_codes(Vn, CB)
-                yield pd.DataFrame(
-                    {
-                        "id": pdf["id"].values,
-                        "centroid_id": ids_[best],
-                        "codes": list(codes),
-                    }
-                )
+    def assign_encode(batches):
+        ids_, Cm, CB = b_ae.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            V = np.array(pdf["v"].tolist(), dtype=np.float64)
+            Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
+            best = np.argmax(Vn @ Cm.T, axis=1)  # ties -> lowest centroid_id
+            codes = _pq_codes(Vn, CB)
+            yield pd.DataFrame(
+                {
+                    "id": pdf["id"].values,
+                    "centroid_id": ids_[best],
+                    "codes": list(codes),
+                }
+            )
 
-        coded = _normalized_matrix_stream(corpus, id_col, vec_col).mapInPandas(
-            assign_encode, "id bigint, centroid_id bigint, codes array<int>"
-        )
-    qids = np.array([r.qid for r in qrows], dtype=np.int64)
-    Q = np.array([list(r.qv) for r in qrows], dtype=np.float64)
-    Q = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-
-    npr = min(nprobe, len(cids))
-    top_cells = np.argsort(-(Q @ Cn.T), axis=1, kind="stable")[:, :npr]  # (nq, npr)
-    probes = local_rows_df(
-        spark,
-        [(int(q), int(c)) for qi, q in enumerate(qids) for c in cids[top_cells[qi]]],
-        "query_id long, centroid_id long",
+    coded = _normalized_matrix_stream(corpus, id_col, vec_col).mapInPandas(
+        assign_encode, "id bigint, centroid_id bigint, codes array<int>"
     )
-
     mm, kk, ss = C.shape
     lut = np.einsum("qms,mks->qmk", Q.reshape(len(Q), mm, ss), C)  # (nq, m, k)
     blut = spark.sparkContext.broadcast((qids, lut))
 
     # candidate pairs: codes of probed cells only, then LUT-score per pair
-    cand = coded.join(F.broadcast(probes), "centroid_id").filter(
-        F.col("query_id") != F.col("id")
-    )
+    cand = coded.join(F.broadcast(probe_cells(spark, qids, Q, cmat, nprobe)), "centroid_id")
 
     def adc_pairs(batches):
         q_ids, L = blut.value
@@ -547,22 +457,4 @@ def ivfpq_topk(
     scored = cand.select("query_id", "id", "codes").mapInPandas(
         adc_pairs, "query_id long, neighbor_id long, pq_score double"
     )
-    w = W.partitionBy("query_id").orderBy(F.col("pq_score").desc(), F.col("neighbor_id"))
-    short = (
-        scored.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv"))
-    nv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("nv"))
-    rer = (
-        short.join(F.broadcast(qv), "query_id")
-        .join(nv, "neighbor_id")
-        .withColumn("cosine", cosine_expr(F.col("qv"), F.col("nv")))
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        rer.withColumn("nn_rank", F.row_number().over(w2))
-        .filter(F.col("nn_rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cosine", 4).alias("cosine"), "nn_rank")
-    )
+    return _rerank(scored, corpus, queries, k, shortlist, id_col, vec_col)

@@ -16,6 +16,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from etl_file_sync_spark.localrel import local_rows_df
+
 
 def vec_ok(col: Column) -> Column:
     """Usable-vector predicate: NOT NULL, no NULL elements, and nonzero
@@ -67,12 +69,61 @@ def cosine_expr(a: Column, b: Column) -> Column:
 
 
 class QuerySideTooLarge(ValueError):
-    """Raised when cosine_topk's query side exceeds max_queries.
+    """Raised when a top-k operator's query side exceeds max_queries.
 
-    The brute-force path broadcasts the normalized query matrix — that
-    contract only holds for a small serving set. For a large query side
-    use ivf_topk (bucketed equi-join, no driver materialization).
+    cosine_topk, pq_topk and ivfpq_topk broadcast the normalized query
+    matrix — that contract only holds for a small serving set. For a
+    large query side use ivf_topk (uncapped bucketed equi-join).
     """
+
+
+_TOPK_SCHEMA = "query_id long, neighbor_id long, cosine double, nn_rank int"
+
+
+def query_matrix(queries: DataFrame, id_col: str, vec_col: str, max_queries: int | None, op: str):
+    """The query side of every top-k operator, collected to the driver:
+    (qids int64 vector, row-normalized float64 matrix).
+
+    Queries without a usable vector (vec_ok) have no neighbors and are
+    dropped. `max_queries` is enforced with a limit-probe — never pull
+    more than max_queries+1 rows even when the caller hands us a huge
+    frame; the failure mode is QuerySideTooLarge, not a driver OOM.
+    None (ivf_topk) collects uncapped. An empty query side returns a
+    (0, 0) matrix; callers answer it with an empty rank_topk frame.
+    """
+    import numpy as np
+
+    q = queries.where(vec_ok(F.col(vec_col))).select(
+        F.col(id_col).alias("qid"), F.col(vec_col).cast("array<double>").alias("qv")
+    )
+    if max_queries is not None:
+        q = q.limit(max_queries + 1)
+    rows = q.collect()
+    if max_queries is not None and len(rows) > max_queries:
+        raise QuerySideTooLarge(
+            f"{op} query side exceeds max_queries={max_queries}; "
+            "use ivf_topk for batch-scale query sets"
+        )
+    qids = np.array([r.qid for r in rows], dtype=np.int64)
+    if not rows:
+        return qids, np.zeros((0, 0), dtype=np.float64)
+    Q = np.array([list(r.qv) for r in rows], dtype=np.float64)
+    return qids, Q / np.linalg.norm(Q, axis=1, keepdims=True)
+
+
+def rank_topk(spark, scored: DataFrame | None, k: int) -> DataFrame:
+    """The rank tail of every top-k operator: scored (query_id,
+    neighbor_id, cosine) pairs -> the k best per query by cosine
+    (ties to the lower neighbor_id), cosine rounded to 4 places.
+    scored=None is the empty answer with the same schema."""
+    if scored is None:
+        return spark.createDataFrame([], _TOPK_SCHEMA)
+    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
+    return (
+        scored.withColumn("nn_rank", F.row_number().over(w))
+        .filter(F.col("nn_rank") <= k)
+        .select("query_id", "neighbor_id", F.round("cosine", 4).alias("cosine"), "nn_rank")
+    )
 
 
 def cosine_topk(
@@ -89,9 +140,8 @@ def cosine_topk(
 
     Execution shape (the top-k *serving* pattern): the query side is
     small BY CONTRACT — `max_queries` (default 10k ≈ 10 MB of 128-dim
-    doubles) is enforced with a limit-probe before the collect, and a
-    `QuerySideTooLarge` is raised past it instead of OOMing the driver;
-    batch-scale query sides belong on ivf_topk. Within the contract:
+    doubles) is enforced by query_matrix, and batch-scale query sides
+    belong on ivf_topk. Within the contract:
     collect the query side, broadcast the normalized matrix, and stream
     the corpus through an Arrow-batched mapInPandas doing one BLAS GEMM
     per batch. The corpus never shuffles; only |queries|·k rows survive
@@ -102,27 +152,9 @@ def cosine_topk(
     import pandas as pd
 
     spark = corpus.sparkSession
-    # limit-probe: never pull more than max_queries+1 rows even when the
-    # caller hands us a huge frame — the failure mode is an exception,
-    # not a driver OOM.
-    qrows = (
-        queries.where(vec_ok(F.col(vec_col)))  # NULL vectors have no neighbors
-        .select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
-        .limit(max_queries + 1)
-        .collect()
-    )
-    if len(qrows) > max_queries:
-        raise QuerySideTooLarge(
-            f"cosine_topk query side exceeds max_queries={max_queries}; "
-            "use ivf_topk for batch-scale query sets"
-        )
-    if not qrows:  # empty query side: no pairs, stable schema
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double, nn_rank int"
-        )
-    qids = np.array([r.qid for r in qrows], dtype=np.int64)
-    Q = np.array([list(r.qv) for r in qrows], dtype=np.float64)
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
+    qids, Qn = query_matrix(queries, id_col, vec_col, max_queries, "cosine_topk")
+    if not len(qids):  # empty query side: no pairs, stable schema
+        return rank_topk(spark, None, k)
     bQ = spark.sparkContext.broadcast((qids, Qn))
 
     def score(batches):
@@ -147,12 +179,7 @@ def cosine_topk(
         F.col(id_col).alias("nid"), F.col(vec_col).alias("v")
     )
     scored = c.mapInPandas(score, "query_id long, neighbor_id long, cosine double")
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("nn_rank", F.row_number().over(w))
-        .filter(F.col("nn_rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cosine", 4).alias("cosine"), "nn_rank")
-    )
+    return rank_topk(spark, scored, k)
 
 
 def _centroid_matrix(centroids: DataFrame):
@@ -241,6 +268,21 @@ def ivf_assign(
         schema += ", cos double"
     out = v.mapInPandas(assign, schema)
     return out.withColumnRenamed("id", id_col)
+
+
+def probe_cells(spark, qids, Q, cmat, nprobe: int) -> DataFrame:
+    """(query_id, centroid_id) for each query's `nprobe` nearest cells of
+    the collected centroid matrix (stable argsort keeps ties on the
+    lower centroid_id) — the probe side of ivf_topk and ivfpq_topk."""
+    import numpy as np
+
+    cids, Cn = cmat
+    top = np.argsort(-(Q @ Cn.T), axis=1, kind="stable")[:, :nprobe]  # (nq, <= nprobe)
+    return local_rows_df(
+        spark,
+        [(int(q), int(c)) for qi, q in enumerate(qids) for c in cids[top[qi]]],
+        "query_id long, centroid_id long",
+    )
 
 
 def assign_top2(
@@ -426,6 +468,7 @@ def ivf_topk(
 
     Returns (query_id, neighbor_id, cosine, nn_rank).
     """
+    spark = corpus.sparkSession
     if kmeans_iters > 0:
         cents = kmeans_centroids(corpus, every, kmeans_iters, id_col, vec_col)
     else:
@@ -436,45 +479,23 @@ def ivf_topk(
     cmat = _centroid_matrix(cents)
     assigned = ivf_assign(corpus, cents, id_col, vec_col, cmat=cmat)  # (vec_id, v, centroid_id)
 
-    # probe selection: same Arrow GEMM shape as ivf_assign, top-nprobe
-    # cells per query (stable argsort keeps ties on the lower centroid_id)
-    import numpy as np
-    import pandas as pd
-
-    cids, Cn = cmat
-    bq = corpus.sparkSession.sparkContext.broadcast((cids, Cn))
-    npr = min(nprobe, len(cids))
-
-    def probe(batches):
-        ids_, Cm = bq.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            Q = np.array(pdf["qv"].tolist(), dtype=np.float64)
-            Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-            top = np.argsort(-(Qn @ Cm.T), axis=1, kind="stable")[:, :npr]
-            n = len(pdf)
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(pdf["query_id"].values, npr),
-                    "qv": [v for v in pdf["qv"] for _ in range(npr)],
-                    "centroid_id": ids_[top].ravel(),
-                }
-            )
-
-    q = queries.where(vec_ok(F.col(vec_col))).select(
+    # No max_queries cap — this is the batch-scale path, and the
+    # broadcast probe join brings the query side to the driver in any
+    # spelling; ids and one normalized matrix are its smallest form.
+    qids, Q = query_matrix(queries, id_col, vec_col, None, "ivf_topk")
+    if not len(qids) or not len(cmat[0]):  # no queries or no centroids
+        return rank_topk(spark, None, k)
+    qv = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
     )
-    probes = q.mapInPandas(probe, "query_id bigint, qv array<double>, centroid_id bigint")
-
     scored = (
-        assigned.join(F.broadcast(probes), "centroid_id")
+        assigned.join(F.broadcast(probe_cells(spark, qids, Q, cmat, nprobe)), "centroid_id")
         .filter(F.col("query_id") != F.col(id_col))
-        .withColumn("cosine", cosine_expr(F.col("qv"), F.col("v")))
+        .join(F.broadcast(qv), "query_id")
+        .select(
+            "query_id",
+            F.col(id_col).alias("neighbor_id"),
+            cosine_expr(F.col("qv"), F.col("v")).alias("cosine"),
+        )
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col(id_col))
-    return (
-        scored.withColumn("nn_rank", F.row_number().over(w))
-        .filter(F.col("nn_rank") <= k)
-        .select("query_id", F.col(id_col).alias("neighbor_id"), F.round("cosine", 4).alias("cosine"), "nn_rank")
-    )
+    return rank_topk(spark, scored, k)

@@ -45,13 +45,23 @@ def parse_jobs(raw: DataFrame, value_col: str = "value") -> DataFrame:
     """
     j = F.from_json(F.col(value_col), JOB_SCHEMA)
     parsed = raw.withColumn("j", j)
-    # from_json returns a struct of nulls for malformed input; "all four
-    # leaves null" distinguishes garbage from a JSON object missing fields
-    # only when the object had none of them — match reference order:
-    # malformed JSON first (ValueError, message.py:68-71), then required
-    # fields (message.py:88-91). We detect true parse failure by
-    # re-checking the payload shape.
-    is_json_obj = F.get_json_object(F.col(value_col), "$") .isNotNull()
+    # from_json returns a struct of nulls for malformed input, so parse
+    # failure is detected separately, matching reference order: malformed
+    # JSON first (ValueError, message.py:68-71), then required fields
+    # (message.py:88-91). The reference's json.loads takes exactly ONE
+    # value with only whitespace around it, while every JVM JSON reader
+    # stops after the first value and ignores what follows ('1 2',
+    # '{"a":1} x'). Two wrapped parses restore the whole-input rule:
+    # '[' v ']' must be an array of exactly one element (catches trailing
+    # values, commas and junk), and '{"v":' v '}' must parse too (catches
+    # a v that closes the wrapping array early, as in '1] [2'). Single
+    # quotes are off, as in json.loads; NaN/Infinity stay on, as in
+    # json.loads.
+    opts = {"allowSingleQuotes": "false"}
+    v = F.col(value_col)
+    one = F.from_json(F.concat(F.lit("["), v, F.lit("]")), "array<string>", opts)
+    closed = F.from_json(F.concat(F.lit('{"v":'), v, F.lit("}")), "map<string,string>", opts)
+    is_json = one.isNotNull() & (F.size(one) == 1) & closed.isNotNull()
     leaf = parsed["j"]
     ok = (
         leaf["source"]["hostname"].isNotNull()
@@ -61,7 +71,7 @@ def parse_jobs(raw: DataFrame, value_col: str = "value") -> DataFrame:
     )
     return parsed.withColumn(
         "parse_error",
-        F.when(~is_json_obj, F.lit(ERR_PARSE)).when(~ok, F.lit(ERR_MISSING)),
+        F.when(~is_json, F.lit(ERR_PARSE)).when(~ok, F.lit(ERR_MISSING)),
     ).withColumn("job_id", F.coalesce(leaf["job_id"], F.expr("uuid()")))
 
 

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import json
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from etl_file_sync_spark.pipeline.config import ServerConfig, servers_dataframe
@@ -59,8 +59,23 @@ def reference_model(msg: str) -> str:
     return "valid"
 
 
+_VALID_JOB = json.dumps(
+    {"source": {"hostname": "KNOWN", "path": "a"}, "destination": {"hostname": "known", "path": "b"}}
+)
+
+
 @settings(max_examples=15, deadline=None)
 @given(st.lists(raw_msg, min_size=1, max_size=30))
+# one JSON value followed by more content: json.loads rejects all of them
+@example(["0\n0"])
+@example(['{"a":1} x'])
+@example(['{"a":1}{"b":2}'])
+@example(["1 2"])
+@example(["[1] [2]"])
+@example([_VALID_JOB + " x"])
+# json.loads accepts NaN, and whitespace around a value
+@example(["NaN"])
+@example(['{"a":1}\n', " " + _VALID_JOB + "\n"])
 def test_classification_matches_reference_model(spark, msgs):
     raw = spark.createDataFrame([(m,) for m in msgs], "value string")
     res = split_valid_dlq(raw, servers_dataframe(spark, SERVERS))
